@@ -132,6 +132,10 @@ def _unescape(t: str) -> str:
         n = int(m.group(2)) if m.group(2) else int(m.group(3), 16)
         if n > 0x10FFFF:
             return ""
+        if 0xD800 <= n <= 0xDFFF:
+            # a lone surrogate cannot be UTF-8 encoded (the Arrow batch
+            # would fail); WHATWG maps surrogate refs to U+FFFD
+            return "\ufffd"
         c = chr(n)
         return "" if _CTRL_RE.match(c) else c
 
@@ -184,7 +188,8 @@ _ESC_ENUM_RE = re.compile(r"(?m)^([ \t]*)(\d{1,9})([.)])(?=[ \t])")
 #     when a text bracket reads \[ and a generated link/image bracket
 #     reads \x03[ (a text ! abutting a REAL link would render as an
 #     image, so both need the escape); generated image bangs are
-#     \x03-marked and skipped
+#     \x03-marked and skipped; text segments only, since a destination
+#     ("/a![b", bracket marked \x03[) must stay byte-exact
 _ESC_BANG_RE = re.compile(r"(?<!\x03)!(?=\\\[|\x03\[)")
 #   & only when it begins a character reference — the text-node round
 #     trip hazard: _unescape turned page text "&amp;amp;" into literal
@@ -205,16 +210,16 @@ _ESC_TILDE_RE = re.compile(r"(?<!\x03)~{2,}")
 
 def _escape_md(t: str) -> str:
     t = _ESC_ANY_RE.sub(r"\\\1", t)
-    t = _ESC_BANG_RE.sub(r"\\!", t)
     t = _ESC_ATX_RE.sub(r"\1\\\2", t)
     t = _ESC_BULLET_RE.sub(r"\1\\\2", t)
     t = _ESC_ENUM_RE.sub(r"\1\2\\\3", t)
     # the after-context escapes run on TEXT segments only (same
     # _PROTECT_RE scope as smartypants): link DESTINATIONS legitimately
-    # contain & and ~ ("?a=1&b=2", "/~user/") and must stay byte-exact
+    # contain !, & and ~ ("?a=1&b=2", "/~user/") and must stay byte-exact
     parts = _PROTECT_RE.split(t)
     for i in range(0, len(parts), 2):
         s = parts[i]
+        s = _ESC_BANG_RE.sub(r"\\!", s)
         s = _ESC_AMP_RE.sub(r"\\&", s)
         s = _ESC_LT_RE.sub(r"\\<", s)
         s = _ESC_TILDE_RE.sub(lambda m: r"\~" * len(m.group(0)), s)

@@ -148,6 +148,18 @@ def _positions(keys: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % np.uint64(n_bits)).astype(np.int64)
 
 
+def _bloom_insert(bits: np.ndarray, keys: np.ndarray, n_bits: int, n_hashes: int) -> None:
+    """Set the bits of int64 ``keys`` in the uint8 bitset ``bits``, in place."""
+    pos = _positions(keys, n_bits, n_hashes).ravel()
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def _bloom_contains(bits: np.ndarray, keys: np.ndarray, n_bits: int, n_hashes: int) -> np.ndarray:
+    """Per key: True if all its bits are set (maybe seen), False if definitely unseen."""
+    pos = _positions(keys, n_bits, n_hashes)
+    return ((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+
+
 class ShardedBloom:
     """Partitioned bloom filter persisted via a SnapshotStore table.
 
@@ -213,9 +225,7 @@ class ShardedBloom:
             bits = np.frombuffer(bytes(head["bitset"]), np.uint8).copy()
             n_bits, n_h = int(head["n_bits"]), int(head["n_hashes"])
             ks = keys_pdf["key"].to_numpy(np.int64) if len(keys_pdf) else np.array([], np.int64)
-            if len(ks):
-                pos = _positions(ks, n_bits, n_h).ravel()
-                np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+            _bloom_insert(bits, ks, n_bits, n_h)
             return pd.DataFrame(
                 {
                     "shard_id": [int(head["shard_id"])],
@@ -256,11 +266,10 @@ class ShardedBloom:
             head = bloom_pdf.iloc[0]
             bits = np.frombuffer(bytes(head["bitset"]), np.uint8)
             n_bits, n_h = int(head["n_bits"]), int(head["n_hashes"])
-            ks = cand_pdf[key_col].to_numpy(np.int64)
-            pos = _positions(ks, n_bits, n_h)
-            hit = ((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
             out = cand_pdf[cand_cols].copy()
-            out["maybe_seen"] = hit
+            out["maybe_seen"] = _bloom_contains(
+                bits, cand_pdf[key_col].to_numpy(np.int64), n_bits, n_h
+            )
             return out
 
         return (
@@ -275,11 +284,13 @@ class ShardedBloom:
         """Two-tier dedup: bloom pre-filter, exact anti-join on survivors.
 
         Returns candidates not in `seen`. Exactly equivalent to a plain
-        anti-join (bloom has no false negatives); at scale the exact
-        tier only sees the maybe_seen fraction.
+        anti-join (bloom has no false negatives). One left-anti join
+        whose condition is ``maybe_seen AND url = seen_url``: a
+        definitely-unseen row never matches, so only the maybe_seen
+        rows are checked against `seen`, and the probe UDF runs once
+        (a union of the two branches would evaluate it twice).
         """
         probed = self.probe(candidates, key_col)
-        unseen_fast = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        resolved = anti_join_seen(maybe, seen, key=url_col)
-        return unseen_fast.unionByName(resolved)
+        seen_urls = seen.select(F.col(url_col).alias("_seen_url")).distinct()
+        cond = F.col("maybe_seen") & (F.col(url_col) == F.col("_seen_url"))
+        return probed.join(seen_urls, cond, "left_anti").drop("maybe_seen")

@@ -99,7 +99,6 @@ class CrawlEngine:
     priority_desc: bool = False  # O2 descending variant
     salted_fetch: bool | str = False  # True | False | "auto" (budget-cap heuristic)
     use_bloom: bool = False
-    use_cuckoo: bool = False
     bloom_shards: int = 8
     #: trap guards (operators/traps.py). Default OFF: reference parity —
     #: the reference crawls every listed URL, so dropping trap-shaped
@@ -127,16 +126,11 @@ class CrawlEngine:
     metrics: list[dict] = field(default_factory=list)
 
     def __post_init__(self) -> None:
-        if self.use_bloom and self.use_cuckoo:
-            raise ValueError("pick one approximate tier: bloom or cuckoo")
-        if self.use_bloom:
-            self.bloom = ShardedBloom(self.spark, self.store, n_shards=self.bloom_shards)
-        elif self.use_cuckoo:
-            from crawler_spark.operators.cuckoo import ShardedCuckoo
-
-            self.bloom = ShardedCuckoo(self.spark, self.store, n_shards=self.bloom_shards)
-        else:
-            self.bloom = None
+        self.bloom = (
+            ShardedBloom(self.spark, self.store, n_shards=self.bloom_shards)
+            if self.use_bloom
+            else None
+        )
         # politeness is static across rounds: compute the constant rank
         # cap ONCE instead of a driver-blocking aggregate per round
         self._budget_cap = budget_cap(self.politeness, self.default_budget)
@@ -190,6 +184,20 @@ class CrawlEngine:
         )
         if self.bloom:
             self.bloom.update(frontier.select("url_key"))
+
+    # ------------------------------------------------------------- URL-seen
+    def _unseen(self, cand: DataFrame, frontier: DataFrame) -> DataFrame:
+        """Candidates whose ``url`` is not in the frontier: the bloom
+        tier in front of the exact anti-join when ``use_bloom``, else
+        the exact anti-join alone."""
+        if not self.bloom:
+            return anti_join_seen(cand, frontier, key="url")
+        return self.bloom.filter_unseen(
+            cand.withColumn("url_key", url_key_col(F.col("url"))),
+            frontier,
+            key_col="url_key",
+            url_col="url",
+        ).drop("url_key")
 
     # ------------------------------------------------------------ trap guard
     def _guard_candidates(self, cand: DataFrame, rnd: int, stage: str) -> DataFrame:
@@ -271,15 +279,7 @@ class CrawlEngine:
         allowed = robots_filter(cand, self.robots)
         allowed = first_wins(allowed, key="url", order_cols=[F.col("url")])
         frontier = self.store.read("frontier")
-        if self.bloom:
-            unseen = self.bloom.filter_unseen(
-                allowed.withColumn("url_key", url_key_col(F.col("url"))),
-                frontier,
-                key_col="url_key",
-                url_col="url",
-            ).drop("url_key")
-        else:
-            unseen = anti_join_seen(allowed, frontier, key="url")
+        unseen = self._unseen(allowed, frontier)
         prio = (
             F.round((F.lit(1.0) - F.coalesce(F.col("priority"), F.lit(0.5))) * 1000)
             if "priority" in urls.columns
@@ -568,15 +568,7 @@ class CrawlEngine:
             key="url",
             order_cols=[F.col("parent_host"), F.col("host_rank"), F.col("pos")],
         )
-        if self.bloom:
-            unseen = self.bloom.filter_unseen(
-                allowed.withColumn("url_key", url_key_col(F.col("url"))),
-                frontier,
-                key_col="url_key",
-                url_col="url",
-            ).drop("url_key")
-        else:
-            unseen = anti_join_seen(allowed, frontier, key="url")
+        unseen = self._unseen(allowed, frontier)
 
         new_entries = unseen.select(
             url_key_col(F.col("url")).alias("url_key"),

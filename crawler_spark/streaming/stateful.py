@@ -5,9 +5,10 @@ operators are the *streaming-native* twins for deployments that feed
 the crawl from a live stream instead of driver-looped rounds:
 
   * :func:`streaming_first_seen` — cross-micro-batch URL-seen dedup.
-    State per shard group is a BLOOM BITSET (same ``_positions`` kernel
-    as the batch tier, ``operators/dedup.py``), not a key list — the
-    state row stays ``bits/8`` bytes regardless of key count, which is
+    State per shard group is a BLOOM BITSET tested and set with the
+    batch tier's ``_bloom_contains``/``_bloom_insert`` kernel
+    (``operators/dedup.py``), not a key list — the state row stays
+    ``bits/8`` bytes regardless of key count, which is
     what survives a 10^10-URL stream (exactly the engine's D3a tier,
     held in streaming state instead of a table). Approximation
     semantics match the batch tier: no false negatives (every truly
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from crawler_spark.operators.dedup import _positions
+from crawler_spark.operators.dedup import _bloom_contains, _bloom_insert
 
 FIRST_SEEN_OUTPUT = T.StructType(
     [
@@ -74,15 +75,13 @@ def streaming_first_seen(
             if not len(pdf):
                 continue
             ks = pdf["url_key"].to_numpy(np.int64)
-            pos = _positions(ks, bits, n_hashes)
             # seen vs the pre-batch bitset; within-batch repeats keep
             # only their first occurrence (exact, vectorized)
-            seen = ((bitset[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+            seen = _bloom_contains(bitset, ks, bits, n_hashes)
             first_in_batch = ~pd.Series(ks).duplicated().to_numpy()
             out_mask = (~seen) & first_in_batch
             if out_mask.any():
-                p = pos[out_mask].ravel()
-                np.bitwise_or.at(bitset, p >> 3, (1 << (p & 7)).astype(np.uint8))
+                _bloom_insert(bitset, ks[out_mask], bits, n_hashes)
                 n_keys += int(out_mask.sum())
                 yield pd.DataFrame(
                     {

@@ -466,6 +466,28 @@ def test_double_encoded_entities_stay_literal():
     assert html_to_md("<p>&#x41;</p>") == "A"
 
 
+def test_surrogate_refs_decode_to_replacement_char():
+    """&#xD800;-&#xDFFF; (hex or decimal) name lone surrogates, which
+    no UTF-8 encoder accepts; WHATWG decodes them to U+FFFD, so one
+    such page cannot fail the whole Arrow batch of the UDF."""
+    import pyarrow as pa
+
+    md = html_to_md("<p>a &#xD800; b &#57343; c &#xdbff;</p>")
+    assert md == "a \ufffd b \ufffd c \ufffd"
+    assert pa.array([md]).to_pylist() == [md]
+    # the neighbours of the range still decode as themselves
+    assert html_to_md("<p>&#xD7FF;&#xE000;</p>") == "\ud7ff\ue000"
+
+
+def test_bang_escape_stays_out_of_destinations():
+    """A ! before [ is escaped in text (image syntax), never inside a
+    link destination, which must round-trip byte-exact."""
+    md = html_to_md('<a href="http://h.test/a![b">t</a>')
+    assert md == "[t](http://h.test/a![b)"
+    assert _re.search(MD_LINK_PAT, md).group(2) == "http://h.test/a![b"
+    assert html_to_md("<p>x ![y] z</p>") == "x \\!\\[y\\] z"
+
+
 # ---------------------------------------------------------------------------
 # r5: nested lists (single-level-only nesting was an enumerated
 # divergence; now innermost-first with CommonMark column indentation)

@@ -41,6 +41,8 @@ def load(path: str) -> dict:
                 v = json.loads(val)
             except ValueError:
                 continue
+            if v == []:  # an empty trial list carries no figure
+                continue
             qs[name] = min(v) if isinstance(v, list) else float(v)
         if qs:
             print(

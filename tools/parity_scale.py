@@ -3,7 +3,7 @@
 build an N-doc world, run the sequential oracle AND the Spark engine,
 compare crawl ordering + URL-seen + extractions exactly.
 
-Usage: python tools/parity_scale.py [n_docs] [--bloom|--cuckoo]
+Usage: python tools/parity_scale.py [n_docs] [--bloom]
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ def main() -> int:
         robots=read_table(spark, fixture_dir, "robots"),
         politeness=read_table(spark, fixture_dir, "politeness"),
         use_bloom=(tier == "--bloom"),
-        use_cuckoo=(tier == "--cuckoo"),
     )
     t0 = time.perf_counter()
     engine.init_frontier(read_table(spark, fixture_dir, "seeds"))
